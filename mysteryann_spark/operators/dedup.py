@@ -147,6 +147,61 @@ def _band_buckets(sigmat: np.ndarray, bands: int, rows_per_band: int) -> np.ndar
     return out.view(np.int64)
 
 
+# Row cap of one doc-pair frame out of the MinHash verify kernel. A rep
+# pair expands to members_a x members_b doc pairs, so a 512k-pair input
+# chunk over two boilerplate groups of 10^5 copies each would otherwise
+# allocate 10^10 rows at once; frames hold ~80 bytes of transient arrays
+# per row, so a frame peaks near 40 MB.
+_PAIR_FRAME_ROWS = 1 << 19
+
+
+def _expand_doc_pairs(
+    ka: np.ndarray,
+    kb: np.ndarray,
+    est: np.ndarray,
+    jac: np.ndarray,
+    mind: np.ndarray,
+    mflat: np.ndarray,
+) -> Iterator[pd.DataFrame]:
+    """Expand surviving rep pairs ``(ka[i], kb[i])`` (indices into the CSR
+    member lists ``mind``/``mflat``) to their members_a x members_b doc
+    pairs, in frames of at most ``_PAIR_FRAME_ROWS`` rows.
+
+    Row ``r`` of the full expansion is pair ``p`` with ``starts[p] <= r <
+    ends[p]`` at offset ``off = r - starts[p]``, i.e. members
+    ``(off // lb, off % lb)``; each frame is one ``[r0, r1)`` slice of
+    those rows, so a rep pair over the cap is split by its offset range
+    and the frames concatenate to the unframed expansion, in order.
+    Member sets of distinct reps are disjoint, so x != y always and
+    min/max is the id_a < id_b orientation.
+    """
+    la = mind[ka + 1] - mind[ka]
+    lb = mind[kb + 1] - mind[kb]
+    cnt = la * lb
+    ends = np.cumsum(cnt)
+    starts = ends - cnt
+    total = int(ends[-1]) if len(ends) else 0
+    for r0 in range(0, total, _PAIR_FRAME_ROWS):
+        r1 = min(r0 + _PAIR_FRAME_ROWS, total)
+        # pairs overlapping [r0, r1), and each one's row count inside it
+        p0 = int(np.searchsorted(ends, r0, side="right"))
+        p1 = int(np.searchsorted(ends, r1 - 1, side="right")) + 1
+        seg = np.minimum(ends[p0:p1], r1) - np.maximum(starts[p0:p1], r0)
+        pidx = np.repeat(np.arange(p0, p1, dtype=np.int64), seg)
+        off = np.arange(r0, r1, dtype=np.int64) - starts[pidx]
+        lb_p = np.maximum(lb[pidx], 1)
+        x = mflat[mind[ka[pidx]] + off // lb_p]
+        y = mflat[mind[kb[pidx]] + off % lb_p]
+        yield pd.DataFrame(
+            {
+                "id_a": np.minimum(x, y),
+                "id_b": np.maximum(x, y),
+                "est_jaccard": est[pidx],
+                "jaccard": jac[pidx],
+            }
+        )
+
+
 def _verify_pairs_staged(
     cand: DataFrame, staged: str, num_perm: int, threshold: float, seed: int
 ) -> DataFrame:
@@ -222,7 +277,7 @@ def _verify_pairs_staged(
         )
         n_keys = len(keys_b)
 
-        def chunk_out(ra: np.ndarray, rb: np.ndarray) -> pd.DataFrame:
+        def chunk_out(ra: np.ndarray, rb: np.ndarray) -> Iterator[pd.DataFrame]:
             n = len(ra)
             ia = np.searchsorted(reps, ra)
             ib = np.searchsorted(reps, rb)
@@ -281,29 +336,7 @@ def _verify_pairs_staged(
             # values that were then thrown away for >98% of pairs
             ka, kb = ia[keep], ib[keep]
             est = (sigmat[ka] == sigmat[kb]).mean(axis=1)
-            jk = jac[keep]
-            # expand each surviving rep pair to its members_a x members_b
-            # doc pairs (vectorized cross product over the CSR member
-            # lists; member sets of distinct reps are disjoint, so x != y
-            # always and min/max is the id_a < id_b orientation)
-            la = mind[ka + 1] - mind[ka]
-            lb = mind[kb + 1] - mind[kb]
-            cnt = la * lb
-            total = int(cnt.sum())
-            pidx = np.repeat(np.arange(len(ka), dtype=np.int64), cnt)
-            ends = np.cumsum(cnt)
-            off = np.arange(total, dtype=np.int64) - np.repeat(ends - cnt, cnt)
-            lb_p = lb[pidx]
-            x = mflat[mind[ka][pidx] + (off // np.maximum(lb_p, 1))]
-            y = mflat[mind[kb][pidx] + (off % np.maximum(lb_p, 1))]
-            return pd.DataFrame(
-                {
-                    "id_a": np.minimum(x, y),
-                    "id_b": np.maximum(x, y),
-                    "est_jaccard": np.repeat(est, cnt),
-                    "jaccard": np.repeat(jk, cnt),
-                }
-            )
+            yield from _expand_doc_pairs(ka, kb, est, jac[keep], mind, mflat)
 
         # Accumulate Arrow batches into bounded chunks before grouping:
         # the group loop runs once per (distinct right rep x CHUNK), so
@@ -326,11 +359,11 @@ def _verify_pairs_staged(
                 ra = np.concatenate([p["rep_a"].to_numpy() for p in acc])
                 rb = np.concatenate([p["rep_b"].to_numpy() for p in acc])
                 acc, acc_rows = [], 0
-                yield chunk_out(ra, rb)
+                yield from chunk_out(ra, rb)
         if acc:
             ra = np.concatenate([p["rep_a"].to_numpy() for p in acc])
             rb = np.concatenate([p["rep_b"].to_numpy() for p in acc])
-            yield chunk_out(ra, rb)
+            yield from chunk_out(ra, rb)
 
     # The caller repartitions the pair set explicitly (see
     # minhash_lsh_pairs) so the kernel chains into the dedup stage with

@@ -28,6 +28,8 @@ groupBy(dst) shuffle — lock-free by construction:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -214,6 +216,29 @@ def repair_reachability(
     return repaired, n_unreached
 
 
+def _start_thread(name: str, fn) -> tuple[threading.Thread, dict]:
+    """Run ``fn`` on a named driver thread; its result or error lands in
+    the returned box for ``_thread_result``."""
+    box: dict = {}
+
+    def run() -> None:
+        try:
+            box["out"] = fn()
+        except BaseException as e:  # re-raised by _thread_result
+            box["err"] = e
+
+    thread = threading.Thread(target=run, name=name)
+    thread.start()
+    return thread, box
+
+
+def _thread_result(thread: threading.Thread, box: dict):
+    thread.join()
+    if "err" in box:
+        raise box["err"]
+    return box["out"]
+
+
 def build_roargraph(
     base_df: DataFrame,
     queries_df: DataFrame,
@@ -262,15 +287,9 @@ def build_roargraph(
     # thread: it reads only base_df, so its two small jobs overlap the
     # phase 0-3 jobs instead of serializing after them (Spark schedules
     # concurrent jobs from separate driver threads; local[32] has slack).
-    import threading
-
-    ep_box: dict[str, int] = {}
-
-    def _medoid() -> None:
-        ep_box["ep"] = medoid(base_df, base_id, vec_col)[0]
-
-    ep_thread = threading.Thread(target=_medoid, name="medoid")
-    ep_thread.start()
+    ep_thread = _start_thread(
+        "medoid", lambda: medoid(base_df, base_id, vec_col)[0]
+    )
 
     # The staged base copy (shared by all three prune calls + the phase-4
     # search) reads only base_df, so its O(n) distributed write OVERLAPS
@@ -279,81 +298,76 @@ def build_roargraph(
     # schedules concurrent jobs from separate driver threads).
     from mysteryann_spark.sources.staging import stage_parquet
 
-    stage_box: dict = {}
-
-    def _stage_base() -> None:
-        try:
-            stage_box["path"] = stage_parquet(
-                base_df.select(F.col(base_id), F.col(vec_col))
-            )
-        except BaseException as e:  # re-raised on join below
-            stage_box["err"] = e
-
-    stage_thread = threading.Thread(target=_stage_base, name="stage-base")
-    stage_thread.start()
-
-    # --- phase 0: kNN of every training query into the base set
-    # (the table the reference loads as learn_base_knn_, :2622-2639)
-    if knn_df is not None:
-        knn = knn_df
-    elif phase0 == "exact":
-        knn = knn_join_arrays(
-            queries_df, base_df, params.M_sq, metric,
-            base_id=base_id, vec_col=vec_col,
-        )
-    elif phase0 == "ivf":
-        from mysteryann_spark.operators.knn_approx import ivf_knn_join_arrays
-
-        knn = ivf_knn_join_arrays(
-            queries_df, base_df, params.M_sq, metric,
-            base_id=base_id, vec_col=vec_col, **(phase0_opts or {}),
-        )
-    else:
-        raise ValueError(f"unknown phase0 mode {phase0!r} (exact|ivf)")
-
-    # one staged copy of the base serves all three prune calls (the
-    # pools shuffle bare id pairs and the kernels look vectors up here);
-    # written concurrently with phase 0 above
-    stage_thread.join()
-    if "err" in stage_box:
-        raise stage_box["err"]
-    staged_base = stage_box["path"]
-
-    # --- phase 1: target = 1-NN; rest of the list -> target's pool
-    tgt = F.element_at("nn", 1)
-    phase1_cands = (
-        knn.select(tgt.alias("node"), F.explode(F.slice("nn", 2, params.M_sq)).alias("cand_id"))
-        .where(F.col("cand_id") != F.col("node"))
+    stage_thread = _start_thread(
+        "stage-base",
+        lambda: stage_parquet(base_df.select(F.col(base_id), F.col(vec_col))),
     )
-    adj1 = prune_candidates(phase1_cands, base_df, params.M_pjbp, metric,
-                            base_id=base_id, vec_col=vec_col,
-                            staged_base=staged_base)
-    # checkpoint BEFORE _prune_merged: it references its input twice
-    # (forward + reversed edges), and Spark does not reuse the shuffle
-    # under the mapInPandas subtree across the two branches — without
-    # the cut, phase 0 + phase 1 execute twice in one query (measured at
-    # 10^7: two full probe/score map stages, 2x the candidate shuffle on
-    # disk — ~40 GB of duplicate shuffle was the run's disk ceiling).
-    # adj1 itself is ~n x M_pjbp ids: two orders lighter than its lineage.
-    adj1 = adj1.localCheckpoint()
 
-    # --- phases 2+3: reverse edges + re-prune overfull nodes
-    adj3 = _prune_merged(_edges(adj1), base_df, params.M_pjbp, metric,
-                         staged_base=staged_base)
-    # ONE staged parquet write both cuts adj3's lineage (phase 4 + the
-    # merged prune reference it; un-cut, phases 0-3 would re-execute) and
-    # IS the phase-4 search's staged adjacency — previously adj3
-    # materialized twice per build (a localCheckpoint job plus a separate
-    # stage_parquet job of identical content). Values are unchanged:
-    # parquet round-trips the exact (node, nbrs) longs, and every
-    # consumer joins/aggregates by id, not row order.
-    adj3_path = stage_parquet(adj3)
-    adj3 = base_df.sparkSession.read.schema(
-        "node bigint, nbrs array<bigint>"
-    ).parquet(adj3_path)
+    # A failed phase joins both side threads before its error propagates:
+    # left running, they would keep submitting jobs (and the staged write
+    # would outlive the call) behind the caller's back.
+    try:
+        # --- phase 0: kNN of every training query into the base set
+        # (the table the reference loads as learn_base_knn_, :2622-2639)
+        if knn_df is not None:
+            knn = knn_df
+        elif phase0 == "exact":
+            knn = knn_join_arrays(
+                queries_df, base_df, params.M_sq, metric,
+                base_id=base_id, vec_col=vec_col,
+            )
+        elif phase0 == "ivf":
+            from mysteryann_spark.operators.knn_approx import ivf_knn_join_arrays
 
-    ep_thread.join()
-    ep = ep_box["ep"]
+            knn = ivf_knn_join_arrays(
+                queries_df, base_df, params.M_sq, metric,
+                base_id=base_id, vec_col=vec_col, **(phase0_opts or {}),
+            )
+        else:
+            raise ValueError(f"unknown phase0 mode {phase0!r} (exact|ivf)")
+
+        # one staged copy of the base serves all three prune calls (the
+        # pools shuffle bare id pairs and the kernels look vectors up here);
+        # written concurrently with phase 0 above
+        staged_base = _thread_result(*stage_thread)
+
+        # --- phase 1: target = 1-NN; rest of the list -> target's pool
+        tgt = F.element_at("nn", 1)
+        phase1_cands = (
+            knn.select(tgt.alias("node"), F.explode(F.slice("nn", 2, params.M_sq)).alias("cand_id"))
+            .where(F.col("cand_id") != F.col("node"))
+        )
+        adj1 = prune_candidates(phase1_cands, base_df, params.M_pjbp, metric,
+                                base_id=base_id, vec_col=vec_col,
+                                staged_base=staged_base)
+        # checkpoint BEFORE _prune_merged: it references its input twice
+        # (forward + reversed edges), and Spark does not reuse the shuffle
+        # under the mapInPandas subtree across the two branches — without
+        # the cut, phase 0 + phase 1 execute twice in one query (measured at
+        # 10^7: two full probe/score map stages, 2x the candidate shuffle on
+        # disk — ~40 GB of duplicate shuffle was the run's disk ceiling).
+        # adj1 itself is ~n x M_pjbp ids: two orders lighter than its lineage.
+        adj1 = adj1.localCheckpoint()
+
+        # --- phases 2+3: reverse edges + re-prune overfull nodes
+        adj3 = _prune_merged(_edges(adj1), base_df, params.M_pjbp, metric,
+                             staged_base=staged_base)
+        # ONE staged parquet write both cuts adj3's lineage (phase 4 + the
+        # merged prune reference it; un-cut, phases 0-3 would re-execute) and
+        # IS the phase-4 search's staged adjacency — previously adj3
+        # materialized twice per build (a localCheckpoint job plus a separate
+        # stage_parquet job of identical content). Values are unchanged:
+        # parquet round-trips the exact (node, nbrs) longs, and every
+        # consumer joins/aggregates by id, not row order.
+        adj3_path = stage_parquet(adj3)
+        adj3 = base_df.sparkSession.read.schema(
+            "node bigint, nbrs array<bigint>"
+        ).parquet(adj3_path)
+
+        ep = _thread_result(*ep_thread)
+    finally:
+        stage_thread[0].join()
+        ep_thread[0].join()
 
     # --- phase 4: connectivity enhancement — beam-search the projection
     # graph from the medoid for every base node, prune visited set

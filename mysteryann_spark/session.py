@@ -7,8 +7,55 @@ partition coalescing), Arrow on (pandas-UDF hot paths), UTC session time
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+
+def install_zipimport_guard() -> bool:
+    """Stop ``importlib.invalidate_caches()`` from re-reading unchanged
+    zip archives; returns whether the guard is in place.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``). Before Python 3.13
+    each cached ``zipimporter`` then re-reads its archive's whole central
+    directory — ~16 importers over pyspark.zip's 1,328 entries, 0.15-0.2
+    CPU-s per task, about half the in-task Python CPU of a graph build
+    (SCALE.md). The replacement stats the archive first and re-reads only
+    when ``(st_mtime_ns, st_size)`` differs from the importer's last
+    read, so a rewritten archive is still seen. Python 3.13 reads the
+    directory lazily and is left alone.
+
+    Called from the package import, so every Python worker that runs one
+    of the package's kernels installs it; gated on the version only —
+    a process that imports the package before any task exists (a worker
+    daemon) must install it too.
+    """
+    if sys.version_info >= (3, 13):
+        return False
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_guarded", False):
+        return True
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            stamp = None
+        else:
+            # stat BEFORE the read: an archive rewritten mid-read leaves
+            # an older stamp, so the next call re-reads again
+            stamp = (st.st_mtime_ns, st.st_size)
+            if stamp == getattr(self, "_read_stamp", None):
+                return
+        reread(self)
+        self._read_stamp = stamp
+
+    invalidate_caches.stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
 
 
 def get_spark(

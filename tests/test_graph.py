@@ -1282,3 +1282,19 @@ def test_precomputed_knn_df_build_matches_inline_phase0(spark, emb):
     assert ep1 == ep2
     assert inline.exceptAll(fed).count() == 0
     assert fed.exceptAll(inline).count() == 0
+
+
+def test_build_joins_side_threads_on_phase0_error(spark, emb):
+    """A failed phase must not leave the build's driver threads running:
+    the medoid and staged-base threads start before phase 0, so a phase-0
+    error has to wait for both before it reaches the caller."""
+    import threading
+
+    from mysteryann_spark.operators.projection import build_roargraph
+
+    base = emb.select("vec_id", "embedding")
+    queries = base.select(F.col("vec_id").alias("qid"), "embedding")
+    with pytest.raises(ValueError, match="unknown phase0"):
+        build_roargraph(base, queries, PARAMS, phase0="bogus")
+    alive = [t.name for t in threading.enumerate() if t.name in ("medoid", "stage-base")]
+    assert alive == []

@@ -737,3 +737,78 @@ def test_quota_sample_exact_counts(spark):
     assert len(got) == len(truth)  # no stratum dropped entirely
     for r in got:
         assert r["count"] == min(_QUOTA, truth[r["lang"]]), r["lang"]
+
+
+def _expand_doc_pairs_unframed(ka, kb, est, jac, mind, mflat):
+    """The one-shot members_a x members_b expansion the framed kernel
+    replaced: every doc pair of every rep pair allocated at once."""
+    import numpy as np
+
+    la = mind[ka + 1] - mind[ka]
+    lb = mind[kb + 1] - mind[kb]
+    cnt = la * lb
+    total = int(cnt.sum())
+    pidx = np.repeat(np.arange(len(ka), dtype=np.int64), cnt)
+    ends = np.cumsum(cnt)
+    off = np.arange(total, dtype=np.int64) - np.repeat(ends - cnt, cnt)
+    lb_p = np.maximum(lb[pidx], 1)
+    x = mflat[mind[ka][pidx] + off // lb_p]
+    y = mflat[mind[kb][pidx] + off % lb_p]
+    return np.minimum(x, y), np.maximum(x, y), np.repeat(est, cnt), np.repeat(jac, cnt)
+
+
+@pytest.mark.parametrize("cap", [None, 4099])
+def test_minhash_pair_expansion_frames_bounded(monkeypatch, cap):
+    """Two near-duplicate groups of 10^3 members each expand to 10^6 doc
+    pairs from ONE rep pair. The verify kernel must yield them in frames
+    of at most the cap (splitting that rep pair by its offset range),
+    and the frames must concatenate to exactly the unframed expansion.
+    Small rep pairs around the big one check frame cuts mid-pair."""
+    import numpy as np
+    import pandas as pd
+
+    from mysteryann_spark.operators import dedup
+
+    if cap is not None:
+        monkeypatch.setattr(dedup, "_PAIR_FRAME_ROWS", cap)
+    # reps: 0 and 1 are the 10^3-member groups; 2..5 are small groups
+    sizes = np.array([1000, 1000, 3, 1, 7, 2], dtype=np.int64)
+    mind = np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64)
+    mflat = np.arange(int(sizes.sum()), dtype=np.int64) * 3 + 11
+    ka = np.array([2, 0, 3, 4], dtype=np.int64)
+    kb = np.array([5, 1, 4, 2], dtype=np.int64)
+    est = np.array([0.81, 0.97, 0.88, 0.9])
+    jac = np.array([0.8, 0.96, 0.875, 0.9])
+
+    # the 10^6-pair rep pair must not fit in one frame
+    assert dedup._PAIR_FRAME_ROWS < 10**6
+    frames = list(dedup._expand_doc_pairs(ka, kb, est, jac, mind, mflat))
+    assert all(len(f) <= dedup._PAIR_FRAME_ROWS for f in frames)
+    got = pd.concat(frames, ignore_index=True)
+    want = _expand_doc_pairs_unframed(ka, kb, est, jac, mind, mflat)
+    assert len(got) == 6 + 10**6 + 7 + 21
+    for col, ref in zip(("id_a", "id_b", "est_jaccard", "jaccard"), want):
+        np.testing.assert_array_equal(got[col].to_numpy(), ref)
+    assert list(dedup._expand_doc_pairs(ka[:0], kb[:0], est[:0], jac[:0], mind, mflat)) == []
+
+
+def test_minhash_two_large_near_dup_groups_pair_set(spark):
+    """End to end over two near-duplicate groups of 10^3 copies each:
+    every one of the C(2000, 2) doc pairs is returned exactly once (10^6
+    of them from one verified rep pair, expanded in bounded frames)."""
+    words = [f"w{i}" for i in range(50)]
+    a = " ".join(words)
+    b = " ".join(words[:-1] + ["zz"])
+    docs = spark.createDataFrame(
+        [(i, a if i < 1000 else b) for i in range(2000)], "doc_id bigint, text string"
+    )
+    pairs = minhash_lsh_pairs(docs, num_perm=32, bands=8, threshold=0.8)
+    stats = pairs.agg(
+        F.count("*").alias("n"),
+        F.countDistinct("id_a", "id_b").alias("distinct"),
+        F.min(F.col("id_b") - F.col("id_a")).alias("min_gap"),
+        F.sum((F.col("jaccard") < 1.0).cast("long")).alias("cross"),
+    ).collect()[0]
+    assert stats["n"] == stats["distinct"] == 2000 * 1999 // 2
+    assert stats["min_gap"] > 0
+    assert stats["cross"] == 1000 * 1000

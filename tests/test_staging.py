@@ -473,8 +473,12 @@ def test_shared_build_stale_winner_takeover(tmp_path, monkeypatch):
     # file old (or absent entirely)
     d = staging._shared_dir("takeover")
     import os
+    import time
 
     os.mkdir(d + ".lock")  # no HEARTBEAT file inside -> stale
+    # ... once the lockdir ages past the stale threshold
+    old = time.time() - staging._STALE_S - 5
+    os.utime(d + ".lock", (old, old))
 
     calls = {"n": 0}
 

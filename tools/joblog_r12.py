@@ -5,29 +5,55 @@ gaps expose driver think-time (planning, localCheckpoint barriers, Python
 staging) that per-query wall timings can't attribute.
 
 Usage: python tools/joblog_r12.py <event-log-file> [desc-filter]
+
+Spark 4 writes zstd-compressed event logs (``*.zstd``) by default; they
+are read with the ``zstandard`` module when it is installed, else by
+piping through ``zstdcat`` from ``PATH``.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
+import shutil
+import subprocess
 import sys
+
+
+@contextlib.contextmanager
+def open_event_log(path: str):
+    """Text lines of an event log, decompressing ``*.zstd`` files."""
+    if not path.endswith(".zstd"):
+        with open(path) as f:
+            yield f
+        return
+    try:
+        import zstandard
+    except ImportError:
+        zstandard = None
+    if zstandard is not None:
+        with open(path, "rb") as raw:
+            yield io.TextIOWrapper(zstandard.ZstdDecompressor().stream_reader(raw))
+        return
+    zstdcat = shutil.which("zstdcat")
+    if zstdcat is None:
+        sys.exit(
+            f"{path} is zstd-compressed: install the zstandard module or put "
+            "zstdcat on PATH (or write the log with "
+            "spark.eventLog.compress=false)"
+        )
+    with subprocess.Popen([zstdcat, "-q", path], stdout=subprocess.PIPE, text=True) as proc:
+        yield proc.stdout
+    if proc.returncode:
+        sys.exit(f"zstdcat failed on {path} (exit {proc.returncode})")
 
 
 def main() -> None:
     path = sys.argv[1]
     flt = sys.argv[2] if len(sys.argv) > 2 else None
     jobs: dict[int, dict] = {}
-    if path.endswith(".zstd"):
-        import io
-
-        import zstandard
-
-        opener = lambda p: io.TextIOWrapper(  # noqa: E731
-            zstandard.ZstdDecompressor().stream_reader(open(p, "rb"))
-        )
-    else:
-        opener = open
-    with opener(path) as f:
+    with open_event_log(path) as f:
         for line in f:
             try:
                 ev = json.loads(line)
