@@ -16,8 +16,6 @@ makes pass 2 a no-op re-scan of pass 1's input.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -252,6 +250,9 @@ def occlusion_prune_batch(
     return out
 
 
+# staged base nodes per prune-kernel task (see prune_candidates)
+_PRUNE_NODES_PER_TASK = 256
+
 _ADJ_SCHEMA = StructType(
     [
         StructField("node", LongType(), False),
@@ -335,9 +336,8 @@ def prune_candidates(
             e,
         )
         n_staged = 0
-    per_task = int(os.environ.get("SPARK_GRAFT_PRUNE_NODES_PER_TASK", "256"))
     n_parts = min(
-        -(-n_staged // max(per_task, 1)),
+        -(-n_staged // _PRUNE_NODES_PER_TASK),
         cand_df.sparkSession.sparkContext.defaultParallelism * 4,
     )
     if n_parts > 1:

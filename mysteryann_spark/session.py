@@ -58,6 +58,10 @@ def install_zipimport_guard() -> bool:
     return True
 
 
+# spark.task.maxFailures for local[N,F] (see get_spark)
+_TASK_ATTEMPTS = 4
+
+
 def get_spark(
     app_name: str = "mysteryann-spark",
     shuffle_partitions: int | None = None,
@@ -78,14 +82,13 @@ def get_spark(
     # (measured: a 47-min 10^8 IVF-PQ build died to a single worker crash).
     # A cluster allows 4 ATTEMPTS by default (spark.task.maxFailures=4);
     # local[N,F]'s F is that same max-attempts count, NOT a retry count —
-    # SPARK_GRAFT_TASK_RETRIES is therefore "max attempts" and defaults to
-    # 4 to match the cluster posture (F=2 would give only one retry).
+    # so _TASK_ATTEMPTS = 4 matches the cluster posture (F=2 would give
+    # only one retry).
     # Retries re-run the same deterministic task, so results are unchanged;
     # a DETERMINISTIC worker crash still fails after F attempts.
-    retries = int(os.environ.get("SPARK_GRAFT_TASK_RETRIES", "4"))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus},{retries}]"))
+        .master(os.environ.get("SPARK_MASTER", f"local[{cpus},{_TASK_ATTEMPTS}]"))
         # At cluster scale shuffle_partitions is sized to data volume; locally
         # ~cores avoids 200-way over-parallelism on tiny inputs.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -154,9 +157,7 @@ def spread(df, min_partitions: int | None = None):
 # Spark hard-fails any broadcast over 8 GB ("Cannot broadcast the table
 # that is larger than 8GB"), and a driver/executor must also hold the
 # built hash relation — so the default stays well under the hard limit.
-_BCAST_CEILING_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BCAST_CEILING_MB", "2048")
-) * 1024 * 1024
+_BCAST_CEILING_BYTES = 2048 * 1024 * 1024
 
 
 def broadcast_if_under(df, est_bytes: float):

@@ -31,14 +31,11 @@ from pyspark.sql import DataFrame
 
 # per-Python-worker artifact cache; bounded so repeated stagings of
 # throwaway indexes (tests, sweeps with fresh builds) can't accumulate.
-# SPARK_GRAFT_WORKER_CACHE sizes it: the default 8 suits test/sf-scale
-# artifacts (MBs each); at rehearsal scale a single staged base matrix is
-# ~n*dim*8 bytes (5+ GB at 10^7 x 64), so big runs set 1-2 to keep
-# worker peak-resident memory to the live artifact instead of the LRU
-# history (phase-0 query matrix + prune base + search CSR would
-# otherwise all linger per worker).
+# 8 entries suit test/sf-scale artifacts (MBs each). At rehearsal scale a
+# staged base matrix is GBs; host-shared staging then caches read-only
+# maps of the one host copy, not a private matrix per worker.
 _CACHE: "OrderedDict[str, object]" = OrderedDict()
-_CACHE_MAX = int(os.environ.get("SPARK_GRAFT_WORKER_CACHE", "8"))
+_CACHE_MAX = 8
 
 
 def _shared_enabled() -> bool:
@@ -60,15 +57,15 @@ def _shared_enabled() -> bool:
 # how often the winner's background thread touches the heartbeat file,
 # and how stale the heartbeat may be before waiters declare the winner
 # dead and contend to take over the build (one at a time — never a herd)
-_HEARTBEAT_S = float(os.environ.get("SPARK_GRAFT_SHARED_HEARTBEAT_S", "5"))
-_STALE_S = float(os.environ.get("SPARK_GRAFT_SHARED_STALE_S", "60"))
+_HEARTBEAT_S = 5.0
+_STALE_S = 60.0
 
 # consecutive winner failures tolerated before the key falls back to
 # NOSHARE (private builds): transient failures (OOM, FS blip) get a
 # bounded serial retry via lock takeover; a deterministically failing
 # build must not be retried by every waiter until Spark exhausts task
 # retries (0.5 s poll + takeover churn with no bound)
-_MAX_SHARED_FAILURES = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_FAILURES", "3"))
+_MAX_SHARED_FAILURES = 3
 
 # scratch budget for host-shared generations: each maintenance-chain step
 # publishes a fresh mysteryann-shared-* npy set (~5 GB at 10^7 x 64-d),
@@ -81,7 +78,7 @@ _MAX_SHARED_FAILURES = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_FAILURES", "3"
 # a new lineage; the old chain's tail would otherwise linger forever)
 # age out as later publishes land. Deleting a still-wanted artifact is
 # a rebuild, never a wrong answer (_peek misses rebuild from parquet).
-_MAX_GENERATIONS = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_GENERATIONS", "8"))
+_MAX_GENERATIONS = 8
 
 # winner-process lineage: artifact key -> the prior-prefix key it was
 # incrementally patched from (set by load_staged_matrix/_graph builders,
@@ -89,25 +86,11 @@ _MAX_GENERATIONS = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_GENERATIONS", "8")
 _LINEAGE: dict[str, str] = {}
 
 
-def _async_publish_enabled() -> bool:
-    """SPARK_GRAFT_ASYNC_PUBLISH=1 moves the winner's O(n) sequential npy
-    publish off the batch critical path (see _shared_build): at 10^8 x
-    64-d the patched base matrix is ~25.6 GB, and a blocking write gates
-    every maintenance batch on the winner's disk bandwidth. Default off:
-    the blocking form hands even the winner the mapped copy, the lowest
-    steady-state residency, which is right whenever the write is small
-    relative to the batch."""
-    return os.environ.get("SPARK_GRAFT_ASYNC_PUBLISH") == "1"
-
-
 def staging_mode() -> dict[str, bool]:
     """Public view of the run's staging configuration — what the scale
     tools print so an A/B's two runs are distinguishable on the page.
     Stable API: tools should read this, not the underscore helpers."""
-    return {
-        "shared_stage": _shared_enabled(),
-        "async_publish": _async_publish_enabled(),
-    }
+    return {"shared_stage": _shared_enabled()}
 
 
 def _shared_dir(key: str) -> str:
@@ -143,9 +126,9 @@ def _shared_save(d: str, obj: tuple) -> None:
     dir (measured r10: four racing 7.4 GB sets = 30 GB in a single key
     dir, ENOSPC at 10^7 maintenance scale), while a concurrent racer's
     IN-FLIGHT files must survive the prune — deleting them lands that
-    racer's manifest pointing at nothing (measured r10 under async
-    publish + takeover: a broken manifest spun every waiter in the
-    manifest-exists loop — the reader side now also self-heals, see
+    racer's manifest pointing at nothing (measured r10 under a takeover
+    from a winner presumed dead: a broken manifest spun every waiter in
+    the manifest-exists loop — the reader side now also self-heals, see
     _shared_build). Aging PER FILE was the r10 ADVICE hazard: a multi-GB
     sequential publish takes minutes, so a slow racer's EARLIEST file
     ages past the cutoff mid-write; grouping by token and aging the set
@@ -423,8 +406,8 @@ def _shared_build(key: str, build: Callable[[], object]) -> object:
                 # files (a racing publish pruned them, or a partial
                 # rmtree) would otherwise spin every waiter here forever
                 # — nobody reaches the acquire path while the manifest
-                # exists (measured r10: the async-publish takeover race
-                # hung a 10^7 maintenance batch for 28 min). After ~5 s
+                # exists (measured r10: a publish/takeover race hung a
+                # 10^7 maintenance batch for 28 min). After ~5 s
                 # of consecutive misses against the SAME manifest
                 # instance, unlink it and contend to rebuild — but only
                 # when provably broken (a named file ABSENT), or as a
@@ -508,7 +491,6 @@ def _shared_build(key: str, build: Callable[[], object]) -> object:
 
         t = threading.Thread(target=_beat, daemon=True)
         t.start()
-        handed_off = False
         try:
             obj = build()
             if (
@@ -518,40 +500,16 @@ def _shared_build(key: str, build: Callable[[], object]) -> object:
                     isinstance(a, np.ndarray) and a.dtype != object for a in obj
                 )
             ):
-                if _async_publish_enabled():
-                    # SPARK_GRAFT_ASYNC_PUBLISH=1: the O(n) sequential
-                    # npy write comes OFF the batch critical path — the
-                    # winner starts its own task work immediately on the
-                    # private copy while a background thread publishes
-                    # for everyone else (heartbeat keeps feeding waiters
-                    # until the manifest lands; a publish crash goes
-                    # stale and the takeover path rebuilds). Cost: the
-                    # winner's worker caches the anon copy instead of
-                    # the map until its LRU evicts it — one transient
-                    # private copy per host, the same peak the blocking
-                    # write already had while saving.
-                    def _publish() -> None:
-                        # a publish crash must hit the SAME FAILED-n
-                        # bound as a blocking-path crash: a deterministic
-                        # failure (ENOSPC on a 25 GB write is the real
-                        # one) otherwise loops forever — every waiter
-                        # takes over, rebuilds, crashes in publish, goes
-                        # stale, repeat. Marker + lock release let the
-                        # next waiter retry, NOSHARE caps the churn.
-                        try:
-                            _shared_save(d, obj)
-                            _gc_scratch(key, d)
-                        except BaseException:
-                            _record_failure()
-                            shutil.rmtree(lock, ignore_errors=True)
-                        finally:
-                            stop.set()
-
-                    pub = threading.Thread(target=_publish, daemon=True)
-                    pub.start()
-                    handed_off = True  # heartbeat now owned by _publish
-                    return obj
                 _shared_save(d, obj)
+                # the manifest landed, so the failure streak is over: the
+                # next winner failure counts from FAILED-1 again instead
+                # of reaching NOSHARE on markers from before this publish
+                for f in os.listdir(d):
+                    if f.startswith("FAILED-"):
+                        try:
+                            os.unlink(os.path.join(d, f))
+                        except OSError:
+                            pass
                 # map the just-published set back; a concurrent same-key
                 # publish may have pruned this token set (a save slower
                 # than _STALE_S ages past even the newest-member gate) or
@@ -595,9 +553,8 @@ def _shared_build(key: str, build: Callable[[], object]) -> object:
             shutil.rmtree(lock, ignore_errors=True)
             raise
         finally:
-            if not handed_off:
-                stop.set()
-                t.join(timeout=2)
+            stop.set()
+            t.join(timeout=2)
 
 
 _STAGE_ROOT: str | None = None
@@ -791,7 +748,7 @@ class StagedBase:
         rows in the chain form) and bounds the per-path parquet open cost
         of cold worker rebuilds. Call when `len(paths)` or measured
         overhang crosses a budget (the maintenance loops use the same
-        cadence knob as their adjacency chain, SPARK_GRAFT_ADJ_COMPACT)."""
+        cadence as their adjacency chain, maintain._ADJ_COMPACT_EVERY)."""
         self.paths = [stage_parquet(live_df, storage_dir)]
         return self
 

@@ -172,7 +172,7 @@ def test_prune_candidates_partition_invariant(spark, emb, monkeypatch):
     across partitionings, and the kernel's (dist,id) sort must erase it."""
     from pyspark.sql import functions as F
 
-    from mysteryann_spark.operators.prune import prune_candidates
+    from mysteryann_spark.operators import prune
 
     cands = (
         emb.select(F.col("vec_id").alias("node"))
@@ -181,12 +181,12 @@ def test_prune_candidates_partition_invariant(spark, emb, monkeypatch):
     )
 
     def run():
-        rows = prune_candidates(cands, emb, m=8, metric="l2").collect()
+        rows = prune.prune_candidates(cands, emb, m=8, metric="l2").collect()
         return {r["node"]: list(r["nbrs"]) for r in rows}
 
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_NODES_PER_TASK", "1000000000")
+    monkeypatch.setattr(prune, "_PRUNE_NODES_PER_TASK", 1000000000)
     one_task = run()
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_NODES_PER_TASK", "16")
+    monkeypatch.setattr(prune, "_PRUNE_NODES_PER_TASK", 16)
     many_tasks = run()
     assert one_task == many_tasks
     assert len(one_task) > 0

@@ -330,45 +330,6 @@ def test_shared_build_deterministic_failure_bounded(tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(d2, "NOSHARE"))
 
 
-def test_shared_build_async_publish(tmp_path, monkeypatch):
-    """SPARK_GRAFT_ASYNC_PUBLISH=1: the winner returns its private copy
-    immediately (no memmap — the write happens in the background), the
-    manifest lands shortly after, and a second caller then gets the
-    mapped copy without rebuilding."""
-    import os
-    import tempfile
-    import time
-
-    import numpy as np
-
-    from mysteryann_spark.sources import staging
-
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_STAGE", "1")
-    monkeypatch.setenv("SPARK_GRAFT_ASYNC_PUBLISH", "1")
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return (np.arange(8, dtype=np.int64), np.full((4, 2), 7.0))
-
-    got = staging._shared_build("kasync", build)
-    assert calls["n"] == 1
-    # winner path: private anon arrays, not memmaps
-    assert not isinstance(got[0], np.memmap)
-    np.testing.assert_array_equal(got[0], np.arange(8))
-    d = staging._shared_dir("kasync")
-    deadline = time.time() + 10
-    while not os.path.exists(os.path.join(d, "MANIFEST.json")):
-        assert time.time() < deadline, "async publish never landed"
-        time.sleep(0.05)
-    got2 = staging._shared_build("kasync", build)
-    assert calls["n"] == 1  # no rebuild
-    assert isinstance(got2[1], np.memmap)
-    np.testing.assert_array_equal(np.asarray(got2[1]), np.full((4, 2), 7.0))
-
-
 def test_shared_scratch_gc_bounded_across_compactions(tmp_path, monkeypatch):
     """Publish-time scratch GC: a maintenance chain that keeps stepping
     (and periodically COMPACTS — new chain, lineage break) must leave a
@@ -562,21 +523,20 @@ def test_shared_save_concurrent_builders_intact(tmp_path, monkeypatch):
     assert len([f for f in os.listdir(d) if f.endswith(".npy")]) == 2
 
 
-def test_shared_build_async_publish_failure_bounded(tmp_path, monkeypatch):
-    """A deterministic ASYNC publish crash (ENOSPC is the realistic one
-    for a 25 GB write) must hit the same FAILED-n / NOSHARE bound as a
-    blocking-path crash — without it every waiter takes over, re-runs the
-    full build, crashes in publish, goes stale, forever."""
+def test_shared_build_publish_failure_bounded(tmp_path, monkeypatch):
+    """A deterministic publish crash (ENOSPC is the realistic one for a
+    multi-GB npy write) hits the same FAILED-n / NOSHARE bound as a
+    failing build: without it every waiter takes over, re-runs the full
+    build, crashes in publish, and the churn never ends."""
     import os
     import tempfile
-    import time
 
     import numpy as np
+    import pytest
 
     from mysteryann_spark.sources import staging
 
     monkeypatch.setenv("SPARK_GRAFT_SHARED_STAGE", "1")
-    monkeypatch.setenv("SPARK_GRAFT_ASYNC_PUBLISH", "1")
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
 
     def boom(d, obj):
@@ -587,31 +547,58 @@ def test_shared_build_async_publish_failure_bounded(tmp_path, monkeypatch):
     arr = (np.arange(4, dtype=np.float64),)
     d = staging._shared_dir("kpubfail")
     for i in range(staging._MAX_SHARED_FAILURES):
-        # winner still gets its private copy back — only the publish dies
-        got = staging._shared_build("kpubfail", lambda: arr)
-        np.testing.assert_array_equal(got[0], arr[0])
-        deadline = time.time() + 10
-        markers = []
-        while time.time() < deadline:
-            markers = (
-                [f for f in os.listdir(d) if f.startswith("FAILED-")]
-                if os.path.isdir(d)
-                else []
-            )
-            if len(markers) >= i + 1:
-                break
-            time.sleep(0.05)
+        with pytest.raises(OSError):
+            staging._shared_build("kpubfail", lambda: arr)
+        markers = [f for f in os.listdir(d) if f.startswith("FAILED-")]
         assert len(markers) == i + 1, f"attempt {i}: markers={markers}"
         # the failed publisher released the lock so a retry can win it
-        deadline = time.time() + 10
-        while os.path.isdir(d + ".lock"):
-            assert time.time() < deadline, "failed publish left the lock held"
-            time.sleep(0.05)
+        assert not os.path.isdir(d + ".lock")
     assert os.path.exists(os.path.join(d, "NOSHARE"))
     assert not os.path.exists(os.path.join(d, "MANIFEST.json"))
     # capped: later callers build privately instead of churning
-    got2 = staging._shared_build("kpubfail", lambda: arr)
-    np.testing.assert_array_equal(got2[0], arr[0])
+    got = staging._shared_build("kpubfail", lambda: arr)
+    assert not isinstance(got[0], np.memmap)
+    np.testing.assert_array_equal(got[0], arr[0])
+
+
+def test_shared_build_publish_resets_failure_count(tmp_path, monkeypatch):
+    """_MAX_SHARED_FAILURES bounds CONSECUTIVE winner failures: a landed
+    publish ends the streak. Two failures, a successful mapped publish,
+    then (after the broken-manifest heal unlinked the manifest and the
+    lock went stale) one more failure must NOT reach NOSHARE, or every
+    later worker on the host builds a private copy."""
+    import os
+    import tempfile
+    import time
+
+    import numpy as np
+    import pytest
+
+    from mysteryann_spark.sources import staging
+
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_STAGE", "1")
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+
+    def bad():
+        raise RuntimeError("transient boom")
+
+    d = staging._shared_dir("kreset")
+    for _ in range(2):
+        with pytest.raises(RuntimeError):
+            staging._shared_build("kreset", bad)
+    out = staging._shared_build("kreset", lambda: (np.arange(3),))
+    assert isinstance(out[0], np.memmap)
+    # the heal path drops the manifest; the winner's lock is left behind
+    # with a heartbeat that has since gone stale
+    os.unlink(os.path.join(d, "MANIFEST.json"))
+    old = time.time() - staging._STALE_S - 5
+    lock = d + ".lock"
+    os.utime(os.path.join(lock, "HEARTBEAT"), (old, old))
+    os.utime(lock, (old, old))
+    with pytest.raises(RuntimeError):
+        staging._shared_build("kreset", bad)
+    assert not os.path.exists(os.path.join(d, "NOSHARE"))
+    assert [f for f in os.listdir(d) if f.startswith("FAILED-")] == ["FAILED-1"]
 
 
 def test_shared_build_waiter_survives_gc_between_check_and_load(

@@ -1,4 +1,4 @@
-"""Round-12 optimization measurement harness.
+"""Round-13 optimization measurement harness.
 
 Captures, for every bench query (bench.py's headline set plus the graph
 build/search legs), the formatted physical plan into

@@ -25,11 +25,10 @@ the worker/host index artifacts PATCH the prior chain prefix instead of
 rebuilding from all parquet (staging.load_staged_graph /
 load_staged_matrix — in shared mode the per-batch publish is one
 sequential O(n)-bytes npy write, seconds, not the minutes-long full
-parquet decode that was the measured 557 s floor of r6). Each shared
-chain step leaves its predecessor's npy set on scratch (~2×n×dim×4 B
-per step at fp32) — long chains on one host should GC prior
-mysteryann-shared-* dirs between batches or lower
-SPARK_GRAFT_ADJ_COMPACT.
+parquet decode that was the measured 557 s floor of r6). Each publish
+unlinks the generation before its predecessor and ages out chains
+retired by compaction (staging._gc_scratch), so shared scratch stays
+bounded without manual cleaning between batches.
 
 Run:  python tools/scale_maintain.py [N] [BATCH] [N_BATCHES]
       (defaults 10_000_000, 10_000, 3; one JSON line per stage —
