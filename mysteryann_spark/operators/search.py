@@ -11,10 +11,12 @@ each Python worker (sources/staging.py; no driver collect round-trip);
 queries stream through ``mapInPandas`` and run the lockstep beam loop in
 numpy (per-round distance computation is one vectorized kernel call over
 every live query's neighbor batch — the Arrow/numpy stand-in for the AVX
-loop + prefetch). Per-query visited tracking is a plain set — the
-executor-local replacement for the epoch visited-array pool
-(visited_list_pool.h), which exists only to amortize allocation across
-OS threads.
+loop + prefetch). Visited tracking is one structure per lockstep chunk
+over (query, row) composite keys, in place of the reference's epoch
+visited-array pool (visited_list_pool.h): a dense bitmap while the
+chunk's key space fits ``_VISITED_BITMAP_BYTES``, an LSM of sorted key
+arrays beyond it (``_visited_set``; crossover measured in SCALE.md
+"Beam-search visited set: dense bitmap below the budget").
 
 Scale: this path assumes the index fits in executor memory — the same
 assumption the single-node reference makes for its whole lifetime. The
@@ -27,7 +29,6 @@ bit-parity-tested against this path in tests/test_graph.py.
 
 from __future__ import annotations
 
-from bisect import insort
 from typing import Iterator
 
 import numpy as np
@@ -73,8 +74,18 @@ def stage_graph_index(
 
 # lockstep batch width for the shared-distance-call beam search: big
 # enough that one einsum round amortizes numpy call overhead, small
-# enough that per-round Python state (pools + visited sets) stays cheap
+# enough that per-chunk state stays cheap — the (chunk, L) pools and the
+# visited set, whose dense-bitmap form is chunk x n_rows bytes
 _BATCH_CHUNK = 256
+
+# largest (query, row) key space, in bytes (one bool per key), that a
+# lockstep chunk tracks with a dense visited bitmap; larger key spaces
+# use the LSM. At 256-query chunks and L=64 the bitmap costs 0.58x the
+# LSM's CPU at 10^4 rows and ties it at 4x10^5 rows (98 MB per chunk);
+# 32 MB covers graphs up to ~1.3x10^5 rows and keeps four workers'
+# bitmaps near 128 MB (SCALE.md "Beam-search visited set: dense bitmap
+# below the budget", reproduced by tools/scale_beam_kernel.py)
+_VISITED_BITMAP_BYTES = 32 << 20
 
 _RESULT_SCHEMA = StructType(
     [
@@ -88,117 +99,37 @@ _RESULT_SCHEMA = StructType(
 )
 
 
-def _beam_search_batch_ref(
-    qmat: np.ndarray,
-    ep_row: int,
-    indptr: np.ndarray,
-    indices: np.ndarray,
-    bmat: np.ndarray,
-    l_search: int,
-    metric: str,
-    exclude_rows: np.ndarray,
-    expand_width: int = 1,
-) -> tuple[list[list[tuple[float, int]]], np.ndarray, np.ndarray]:
-    """Best-first loop for a BATCH of queries in lockstep. Per query the
-    state evolution is identical to running the sequential loop alone —
-    pool entries are (dist, row) kept sorted, expanded rows tracked
-    separately: NeighborPriorityQueue semantics (neighbor.h:138-223) with
-    the (dist, id) total order. Lockstep exists purely to amortize the
-    distance kernel: each round gathers every live query's one frontier
-    expansion and scores all (query, neighbor) pairs with a single
-    row-wise einsum call, instead of one numpy call per (query, hop) —
-    the per-call overhead was the #1 cost of the graph build's
-    connectivity phase.
+class _VisitedBitmap:
+    """Batch visited-set over (query, row) composite keys as one dense
+    bool array of the chunk's whole key space: membership is one gather,
+    marking one scatter. This is the lockstep form of the reference's
+    per-query visited arrays (visited_list_pool.h) — one row of flags
+    per query, so concurrent queries in a chunk never share a mark. Its
+    cost is the n_keys bytes, which is why ``_visited_set`` hands key
+    spaces beyond ``_VISITED_BITMAP_BYTES`` to ``_VisitedLSM``."""
 
-    ``expand_width`` > 1 expands up to that many unexpanded pool entries
-    per round INSTEAD of the strict best-first one: round count (and with
-    it the per-round Python bookkeeping that dominates long searches at
-    large L) drops ~width-fold, at the cost of scoring some neighbors a
-    strict order would have pruned. Width 1 (default) is bit-identical
-    to the reference's loop; wider is the standard batched-greedy
-    relaxation, recall-gated where used (the 10^5-node rehearsal).
+    def __init__(self, n_keys: int, init_keys: np.ndarray):
+        self.bits = np.zeros(n_keys, dtype=bool)
+        self.bits[init_keys] = True
 
-    cmps counts post-seed distance evaluations only — the reference
-    zeroes its comparison counter after scoring the entry point
-    (SearchRoarGraph, src/index_bipartite.cpp:2311-2420).
+    def contains(self, keys: np.ndarray) -> np.ndarray:
+        return self.bits[keys]
 
-    Returns (pools, cmps, hops) with one entry per query row.
-    """
-    n_q = qmat.shape[0]
-    d0 = np_pair_distances(metric, qmat, np.broadcast_to(bmat[ep_row], qmat.shape))
-    pools: list[list[tuple[float, int]]] = [[(float(d0[i]), int(ep_row))] for i in range(n_q)]
-    expanded: list[set[int]] = [set() for _ in range(n_q)]
-    visited: list[set[int]] = [{int(ep_row)} for _ in range(n_q)]
-    cmps = np.zeros(n_q, dtype=np.int64)
-    hops = np.zeros(n_q, dtype=np.int64)
-    live = list(range(n_q))
-    while live:
-        nxt: list[int] = []
-        owners: list[tuple[int, int]] = []  # (query idx, n fresh)
-        fresh_all: list[int] = []
-        for i in live:
-            pool, exp = pools[i], expanded[i]
-            curs = []
-            for d, r in pool:
-                if r not in exp:
-                    curs.append(r)
-                    if len(curs) >= expand_width:
-                        break
-            if not curs:
-                continue  # pool fully expanded -> query done
-            nxt.append(i)
-            vis, ex = visited[i], exclude_rows[i]
-            fresh: list[int] = []
-            for r in curs:
-                exp.add(r)
-                hops[i] += 1
-                for n in indices[indptr[r] : indptr[r + 1]]:
-                    if n not in vis and n != ex:
-                        vis.add(n)
-                        fresh.append(n)
-            if fresh:
-                owners.append((i, len(fresh)))
-                fresh_all.extend(fresh)
-        live = nxt
-        if not fresh_all:
-            continue
-        rows = np.asarray(fresh_all, dtype=np.int64)
-        qidx = np.repeat(
-            np.fromiter((i for i, _ in owners), dtype=np.int64, count=len(owners)),
-            np.fromiter((nf for _, nf in owners), dtype=np.int64, count=len(owners)),
-        )
-        dists = np_pair_distances(metric, qmat[qidx], bmat[rows])
-        off = 0
-        for i, nf in owners:
-            ds, rs = dists[off : off + nf], rows[off : off + nf]
-            off += nf
-            cmps[i] += nf
-            pool = pools[i]
-            # boundary test uses the FULL (dist, id) tuple order — a
-            # candidate tied on distance with a smaller row id at a full
-            # pool's boundary replaces the boundary entry, matching
-            # NeighborPriorityQueue's total order (neighbor.h:138-223)
-            # and the vectorized kernel's merge
-            worst = pool[-1] if len(pool) >= l_search else (np.inf, -1)
-            for d, r in zip(ds, rs):
-                cand = (float(d), int(r))
-                if cand < worst or len(pool) < l_search:
-                    insort(pool, cand)
-                    if len(pool) > l_search:
-                        pool.pop()
-                        worst = pool[-1]
-    return pools, cmps, hops
+    def add_sorted(self, keys: np.ndarray) -> None:
+        self.bits[keys] = True
 
 
 class _VisitedLSM:
     """Batch visited-set over (query, row) composite keys: a few sorted
     int64 arrays (LSM levels), membership = one vectorized searchsorted
     per level, insertion = append a sorted level and merge when the level
-    count passes the fanout. This is the lockstep replacement for the
-    reference's per-query visited lists (visited_list_pool.h): per-row
-    epoch tags can't work here because concurrent queries in one chunk
-    would overwrite each other's marks in a shared array, and per-query
-    2D bitmaps are O(n_rows x chunk) memory at 10^7 rows."""
+    count passes the fanout. Memory follows the keys actually visited,
+    not the key space, so it serves the graphs whose chunk bitmap would
+    pass ``_VISITED_BITMAP_BYTES`` (~1.3x10^5 rows at 256-query chunks;
+    the 10^7-row regime). Below that the bitmap is faster: SCALE.md
+    measured 0.51 vs 0.30 CPU-s at 10^4 rows, a tie at 4x10^5 rows and
+    the LSM ahead at 10^6 (0.75 vs 1.15 CPU-s), where faulting in a
+    fresh 244 MB bitmap per chunk costs more than the probes save."""
 
     _FANOUT = 8
 
@@ -233,6 +164,19 @@ class _VisitedLSM:
             self.levels.append(np.sort(np.concatenate([a, b])))
 
 
+def _visited_set(
+    n_keys: int, init_keys: np.ndarray
+) -> _VisitedBitmap | _VisitedLSM:
+    """The visited set for one lockstep chunk over a key space of
+    ``n_keys`` (query, row) composite keys, pre-marked with
+    ``init_keys``: the dense bitmap when its n_keys bytes fit
+    ``_VISITED_BITMAP_BYTES``, the LSM otherwise. Both mark and report
+    the same keys, so the choice never changes a search's results."""
+    if n_keys <= _VISITED_BITMAP_BYTES:
+        return _VisitedBitmap(n_keys, init_keys)
+    return _VisitedLSM(init_keys)
+
+
 def _merge_pools(
     pool_d: np.ndarray,
     pool_r: np.ndarray,
@@ -257,18 +201,21 @@ def _merge_pools(
         return
     o = np.lexsort((nbr, dists, orow))
     orow, dists, nbr = orow[o], dists[o], nbr[o]
-    lo = np.zeros(K, dtype=np.int64)
-    hi = np.full(K, L, dtype=np.int64)
-    while True:
-        active = lo < hi
-        if not active.any():
-            break
-        mid = (lo + hi) >> 1
-        vd, vr = pool_d[orow, mid], pool_r[orow, mid]
-        less = (vd < dists) | ((vd == dists) & (vr < nbr))
-        lo = np.where(active & less, mid + 1, lo)
-        hi = np.where(active & ~less, mid, hi)
-    pos = lo
+    # branch-free binary search over flat row offsets: pos accumulates
+    # power-of-two steps past entries that sort before the candidate;
+    # probes past column L-1 re-read the row's last entry, which keeps
+    # the row sorted, so pos only overshoots L when every entry is less
+    flat_d, flat_r = pool_d.reshape(-1), pool_r.reshape(-1)
+    row0 = orow * np.int64(L)
+    last = row0 + (L - 1)
+    pos = np.zeros(K, dtype=np.int64)
+    step = 1 << (int(L).bit_length() - 1)
+    while step:
+        idx = np.minimum(row0 + pos + (step - 1), last)
+        vd, vr = flat_d[idx], flat_r[idx]
+        pos += ((vd < dists) | ((vd == dists) & (vr < nbr))) * step
+        step >>= 1
+    np.minimum(pos, L, out=pos)
     seg = np.bincount(orow, minlength=live_n)
     aff = np.nonzero(seg)[0]
     seg_aff = seg[aff]
@@ -288,14 +235,16 @@ def _merge_pools(
     new_d = np.empty((la, W))
     new_r = np.empty((la, W), dtype=np.int64)
     new_e = np.empty((la, W), dtype=bool)
-    ax = np.arange(la)[:, None]
-    new_d[ax, dest_old] = pool_d[aff]
-    new_r[ax, dest_old] = pool_r[aff]
-    new_e[ax, dest_old] = pool_e[aff]
-    dest_c = pos + k_within
-    new_d[r_idx, dest_c] = dists
-    new_r[r_idx, dest_c] = nbr
-    new_e[r_idx, dest_c] = False
+    # scatter through flat offsets into the (la, W) buffers, computed
+    # once for the three old-entry scatters and once for the candidates
+    flat_old = (dest_old + (np.arange(la, dtype=np.int64) * W)[:, None]).reshape(-1)
+    new_d.reshape(-1)[flat_old] = pool_d[aff].reshape(-1)
+    new_r.reshape(-1)[flat_old] = pool_r[aff].reshape(-1)
+    new_e.reshape(-1)[flat_old] = pool_e[aff].reshape(-1)
+    flat_c = r_idx * W + pos + k_within
+    new_d.reshape(-1)[flat_c] = dists
+    new_r.reshape(-1)[flat_c] = nbr
+    new_e.reshape(-1)[flat_c] = False
     pool_d[aff] = new_d[:, :L]
     pool_r[aff] = new_r[:, :L]
     pool_e[aff] = new_e[:, :L]
@@ -313,10 +262,12 @@ def _beam_search_batch(
     expand_width: int = 1,
     return_arrays: bool = False,
 ) -> tuple[list[list[tuple[float, int]]], np.ndarray, np.ndarray]:
-    """Vectorized lockstep rendering of ``_beam_search_batch_ref`` —
-    bit-identical state evolution (pools ordered by the same (dist, row)
-    total order, same visited-first-occurrence semantics, same cmps/hops
-    counters; parity-gated in tests/test_graph.py), with the per-round
+    """Vectorized lockstep best-first search for a BATCH of queries —
+    bit-identical state evolution to the scalar per-query loop
+    (``beam_search_batch_ref`` in tests/beam_ref.py: pools ordered by the
+    same (dist, row) total order, same visited-first-occurrence
+    semantics, same cmps/hops counters; parity-gated in
+    tests/test_graph.py under both visited sets), with the per-round
     per-query Python bookkeeping that dominated small-batch throughput
     (pool scans, per-neighbor set ops, insort) replaced by whole-batch
     numpy:
@@ -330,11 +281,23 @@ def _beam_search_batch(
     * candidates that cannot beat their pool's current worst are dropped
       up front (the scalar insertion test), and the survivors merge via
       sort-free batched scatter (``_merge_pools``);
-    * visited tracking is an LSM of sorted (query, row) composite-key
-      arrays (``_VisitedLSM``) — membership and marking are vectorized
-      over the whole round's candidates at once;
+    * visited tracking is over (query, row) composite keys in the
+      key space n_q x n_rows (``_visited_set``): a dense bitmap, one
+      gather to probe and one scatter to mark, while that space fits
+      ``_VISITED_BITMAP_BYTES``, else an LSM of sorted key arrays
+      (``_VisitedLSM``) — either way vectorized over the whole round's
+      candidates at once;
     * within-round first-occurrence dedup is one np.unique over the same
       composite keys, preserving the scalar loop's mark-as-you-go order.
+
+    ``expand_width`` > 1 expands up to that many unexpanded pool entries
+    per round instead of the strict best-first one: the round count
+    drops ~width-fold, at the cost of scoring some neighbors a strict
+    order would have pruned. Width 1 is the reference's loop; wider is
+    the standard batched-greedy relaxation, recall-gated where used.
+    cmps counts post-seed distance evaluations only — the reference
+    zeroes its counter after scoring the entry point (SearchRoarGraph,
+    src/index_bipartite.cpp:2311-2420).
 
     SCALE.md's r6 finding motivates this: at 1k queries the per-round
     Python loop was the wall (threads 16->32 bought nothing); the
@@ -360,8 +323,8 @@ def _beam_search_batch(
     out_r = np.empty((n_q, L), dtype=np.int64)
 
     nr64 = np.int64(n_rows)
-    visited = _VisitedLSM(
-        np.arange(n_q, dtype=np.int64) * nr64 + np.int64(ep_row)
+    visited = _visited_set(
+        n_q * n_rows, np.arange(n_q, dtype=np.int64) * nr64 + np.int64(ep_row)
     )
     live = np.arange(n_q, dtype=np.int64)  # global qid of each pool row
     row_of = np.arange(n_q, dtype=np.int64)  # global qid -> pool row
@@ -464,96 +427,6 @@ def _beam_search_batch(
     return pools, cmps, hops
 
 
-def _beam_search_bipartite_batch_ref(
-    qmat: np.ndarray,
-    seed_rows_list: list[list[int]],
-    indptr: np.ndarray,
-    indices: np.ndarray,
-    bmat: np.ndarray,
-    l_search: int,
-    metric: str,
-) -> tuple[list[list[tuple[float, int]]], np.ndarray, np.ndarray]:
-    """2-hop best-first loop over the bipartite graph for a BATCH of
-    queries in lockstep (SearchBipartiteGraph,
-    src/index_bipartite.cpp:282-356): expanding a base node walks
-    base -> query-node -> base, so only base nodes are ever scored.
-    Seeds are pre-drawn random base rows; per query the state evolution
-    is identical to running its loop alone — lockstep only shares the
-    per-round distance kernel call (see _beam_search_batch).
-
-    cmps excludes seed scoring — the reference's counter convention.
-    """
-    n_q = qmat.shape[0]
-    uniq_list = [list(dict.fromkeys(s)) for s in seed_rows_list]
-    seed_qidx = np.repeat(
-        np.arange(n_q, dtype=np.int64),
-        np.fromiter((len(u) for u in uniq_list), dtype=np.int64, count=n_q),
-    )
-    seed_flat = np.fromiter(
-        (r for u in uniq_list for r in u), dtype=np.int64, count=len(seed_qidx)
-    )
-    seed_d = np_pair_distances(metric, qmat[seed_qidx], bmat[seed_flat])
-    pools: list[list[tuple[float, int]]] = []
-    off = 0
-    for u in uniq_list:
-        ds = seed_d[off : off + len(u)]
-        off += len(u)
-        pools.append(sorted((float(d), int(r)) for d, r in zip(ds, u))[:l_search])
-    visited: list[set[int]] = [set(u) for u in uniq_list]
-    expanded: list[set[int]] = [set() for _ in range(n_q)]
-    cmps = np.zeros(n_q, dtype=np.int64)
-    hops = np.zeros(n_q, dtype=np.int64)
-    live = list(range(n_q))
-    while live:
-        nxt: list[int] = []
-        owners: list[tuple[int, int]] = []
-        fresh_all: list[int] = []
-        for i in live:
-            pool, exp = pools[i], expanded[i]
-            cur = next(((d, r) for d, r in pool if r not in exp), None)
-            if cur is None:
-                continue
-            nxt.append(i)
-            exp.add(cur[1])
-            hops[i] += 1
-            vis = visited[i]
-            fresh: list[int] = []
-            for nbr in indices[indptr[cur[1]] : indptr[cur[1] + 1]]:
-                for nn2 in indices[indptr[nbr] : indptr[nbr + 1]]:
-                    if nn2 not in vis:
-                        vis.add(nn2)
-                        fresh.append(int(nn2))
-            if fresh:
-                owners.append((i, len(fresh)))
-                fresh_all.extend(fresh)
-        live = nxt
-        if not fresh_all:
-            continue
-        rows = np.asarray(fresh_all, dtype=np.int64)
-        qidx = np.repeat(
-            np.fromiter((i for i, _ in owners), dtype=np.int64, count=len(owners)),
-            np.fromiter((nf for _, nf in owners), dtype=np.int64, count=len(owners)),
-        )
-        dists = np_pair_distances(metric, qmat[qidx], bmat[rows])
-        off = 0
-        for i, nf in owners:
-            ds, rs = dists[off : off + nf], rows[off : off + nf]
-            off += nf
-            cmps[i] += nf
-            pool = pools[i]
-            # full (dist, id) tuple order at the pool boundary — see
-            # _beam_search_batch_ref
-            worst = pool[-1] if len(pool) >= l_search else (np.inf, -1)
-            for d, r in zip(ds, rs):
-                cand = (float(d), int(r))
-                if cand < worst or len(pool) < l_search:
-                    insort(pool, cand)
-                    if len(pool) > l_search:
-                        pool.pop()
-                        worst = pool[-1]
-    return pools, cmps, hops
-
-
 def _beam_search_bipartite_batch(
     qmat: np.ndarray,
     seed_rows_list: list[list[int]],
@@ -564,11 +437,16 @@ def _beam_search_bipartite_batch(
     metric: str,
     return_arrays: bool = False,
 ) -> tuple[list[list[tuple[float, int]]], np.ndarray, np.ndarray]:
-    """Vectorized rendering of ``_beam_search_bipartite_batch_ref`` —
-    bit-identical state evolution (parity-gated in tests/test_graph.py),
-    built from the same parts as the projection-graph kernel: compacted
+    """Vectorized 2-hop best-first search over the bipartite graph
+    (SearchBipartiteGraph, src/index_bipartite.cpp:282-356) for a BATCH
+    of queries — bit-identical state evolution to the scalar loop
+    (``beam_search_bipartite_batch_ref`` in tests/beam_ref.py;
+    parity-gated in tests/test_graph.py under both visited sets), built
+    from the same parts as the projection-graph kernel: compacted
     (n_live, L) sorted pools, sort-free scatter merges (_merge_pools),
-    an LSM visited set, and strict best-first frontier selection. The
+    a visited set over the n_q x total key space (``_visited_set``:
+    dense bitmap within ``_VISITED_BITMAP_BYTES``, LSM beyond), and
+    strict best-first frontier selection. The
     only structural difference is the 2-hop expansion (base ->
     query-node -> base: two chained CSR gathers) and multi-seed pool
     initialization (seeds merge into an empty pool; their scoring is
@@ -596,7 +474,7 @@ def _beam_search_bipartite_batch(
     skey, first = np.unique(s_qidx * t64 + s_rows, return_index=True)
     first.sort()
     s_qidx, s_rows = s_qidx[first], s_rows[first]
-    visited = _VisitedLSM(skey)
+    visited = _visited_set(n_q * total, skey)
     s_d = np_pair_distances(metric, qmat[s_qidx], bmat[s_rows])
     _merge_pools(pool_d, pool_r, pool_e, n_q, s_qidx, s_d, s_rows, L)
 

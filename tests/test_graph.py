@@ -1043,96 +1043,211 @@ def test_delete_entry_point_reseeds_medoid(spark, emb, index):
     assert ep not in {r["nn_id"] for r in res.select("nn_id").collect()}
 
 
-def test_vectorized_beam_kernel_bit_parity_with_scalar_reference():
-    """The production beam kernel (_beam_search_batch: compacted pools,
-    sort-free scatter merge, LSM visited set) must evolve bit-identically
-    to the plain scalar loop (_beam_search_batch_ref) — pools, cmps and
-    hops all equal — across metrics, widths, pool sizes, exclusions and
-    graph shapes. This is the gate that lets the pinned search oracles
-    keep certifying the fast kernel."""
+def _visited_paths(monkeypatch):
+    """Yield once per visited set of the lockstep kernels: the dense
+    bitmap (the default budget covers every test graph), then the LSM
+    (budget 0 sends every key space to it)."""
+    from mysteryann_spark.operators import search
+
+    for path, budget in (("bitmap", search._VISITED_BITMAP_BYTES), ("lsm", 0)):
+        monkeypatch.setattr(search, "_VISITED_BITMAP_BYTES", budget)
+        yield path
+
+
+def _random_graph(rng, n, deg):
+    """CSR (indptr, indices) of a random directed graph on ``n`` rows,
+    1..deg distinct out-neighbours per row."""
     import numpy as np
 
-    from mysteryann_spark.operators.search import (
-        _beam_search_batch,
-        _beam_search_batch_ref,
-    )
-
-    rng = np.random.default_rng(7)
-    for trial in range(25):
-        n = int(rng.integers(30, 400))
-        deg = int(rng.integers(2, 12))
-        bmat = rng.standard_normal((n, 16))
-        lists = [
-            rng.choice(n, size=rng.integers(1, deg + 1), replace=False)
-            for _ in range(n)
-        ]
-        indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
-        indices = np.concatenate(lists).astype(np.int64)
-        nq = int(rng.integers(1, 50))
-        qmat = rng.standard_normal((nq, 16))
-        L = int(rng.integers(2, 40))
-        w = int(rng.choice([1, 1, 2, 4, 8]))
-        metric = str(rng.choice(["l2", "ip", "cosine"]))
-        excl = np.where(
-            rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
-        ).astype(np.int64)
-        ep = int(rng.integers(0, n))
-        p1, c1, h1 = _beam_search_batch_ref(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        p2, c2, h2 = _beam_search_batch(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        assert np.array_equal(c1, c2), (trial, metric, w)
-        assert np.array_equal(h1, h2), (trial, metric, w)
-        assert p1 == p2, (trial, metric, w)
+    lists = [
+        rng.choice(n, size=rng.integers(1, deg + 1), replace=False)
+        for _ in range(n)
+    ]
+    indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+    return indptr, np.concatenate(lists).astype(np.int64)
 
 
-def test_vectorized_bipartite_kernel_bit_parity_with_scalar_reference():
+def test_visited_set_dispatch_respects_bitmap_budget(monkeypatch):
+    """``_visited_set`` hands a key space that fits
+    ``_VISITED_BITMAP_BYTES`` to the dense bitmap, one key more to the
+    LSM, and the bitmap never allocates past the budget. Both kernels
+    ask for their chunk's full key space: n_q x n_rows for the
+    projection graph, n_q x total (base + query nodes) for the
+    bipartite graph."""
+    import numpy as np
+
+    from mysteryann_spark.operators import search
+
+    budget = search._VISITED_BITMAP_BYTES
+    keys = np.array([0, 5, budget - 1], dtype=np.int64)
+    vs = search._visited_set(budget, keys)
+    assert isinstance(vs, search._VisitedBitmap)
+    assert vs.bits.nbytes <= budget
+    assert vs.contains(keys).all()
+    assert not vs.contains(np.array([1, budget - 2], dtype=np.int64)).any()
+    vs.add_sorted(np.array([1], dtype=np.int64))
+    assert vs.contains(np.array([1], dtype=np.int64)).all()
+    assert isinstance(search._visited_set(budget + 1, keys), search._VisitedLSM)
+
+    seen = []
+    real = search._visited_set
+
+    def spy(n_keys, init_keys):
+        vs = real(n_keys, init_keys)
+        seen.append((n_keys, type(vs)))
+        if isinstance(vs, search._VisitedBitmap):
+            assert vs.bits.nbytes <= search._VISITED_BITMAP_BYTES
+        return vs
+
+    monkeypatch.setattr(search, "_visited_set", spy)
+    rng = np.random.default_rng(3)
+    n, nq = 120, 9
+    bmat = rng.standard_normal((n, 8))
+    indptr, indices = _random_graph(rng, n, 6)
+    qmat = rng.standard_normal((nq, 8))
+    excl = np.full(nq, -1, dtype=np.int64)
+    # a budget one key short of the chunk's key space sends it to the LSM
+    for b, kind in ((nq * n, search._VisitedBitmap), (nq * n - 1, search._VisitedLSM)):
+        monkeypatch.setattr(search, "_VISITED_BITMAP_BYTES", b)
+        search._beam_search_batch(qmat, 0, indptr, indices, bmat, 10, "l2", excl)
+        assert seen.pop() == (nq * n, kind)
+    # bipartite: 80 base nodes link to the 40 query nodes above them
+    nb, total = 80, 120
+    lists = [nb + rng.choice(total - nb, size=3, replace=False) for _ in range(nb)]
+    lists += [rng.choice(nb, size=3, replace=False) for _ in range(total - nb)]
+    indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+    indices = np.concatenate(lists).astype(np.int64)
+    for b, kind in ((nq * total, search._VisitedBitmap), (nq * total - 1, search._VisitedLSM)):
+        monkeypatch.setattr(search, "_VISITED_BITMAP_BYTES", b)
+        search._beam_search_bipartite_batch(
+            qmat, [[1, 2]] * nq, indptr, indices, bmat[:nb], 10, "l2")
+        assert seen.pop() == (nq * total, kind)
+
+
+@pytest.mark.parametrize("path", ["bitmap", "lsm"])
+@pytest.mark.parametrize("width", [1, 4])
+def test_beam_kernel_results_independent_of_query_chunking(monkeypatch, path, width):
+    """Results must not depend on how queries are partitioned into
+    lockstep chunks (and so not on the core count that sizes them): one
+    ``_beam_search_batch`` call over ~600 queries equals the
+    concatenation of calls over chunks of 1, 7 and 256 queries — pools,
+    cmps and hops — under either visited set."""
+    import numpy as np
+
+    from mysteryann_spark.operators import search
+
+    if path == "lsm":
+        monkeypatch.setattr(search, "_VISITED_BITMAP_BYTES", 0)
+    rng = np.random.default_rng(41)
+    n, nq = 300, 601
+    bmat = rng.standard_normal((n, 12))
+    indptr, indices = _random_graph(rng, n, 8)
+    qmat = rng.standard_normal((nq, 12))
+    excl = np.where(rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1)
+
+    def run(lo, hi):
+        return search._beam_search_batch(
+            qmat[lo:hi], 7, indptr, indices, bmat, 16, "l2", excl[lo:hi],
+            expand_width=width, return_arrays=True,
+        )
+
+    whole = run(0, nq)
+    for chunk in (1, 7, 256):
+        parts = [run(s, s + chunk) for s in range(0, nq, chunk)]
+        for j, name in enumerate(("out_d", "out_r", "cmps", "hops")):
+            got = np.concatenate([p[j] for p in parts])
+            assert np.array_equal(got, whole[j]), (chunk, name)
+
+
+def test_vectorized_beam_kernel_bit_parity_with_scalar_reference(monkeypatch):
+    """The production beam kernel (_beam_search_batch: compacted pools,
+    sort-free scatter merge, bitmap or LSM visited set) must evolve
+    bit-identically to the plain scalar loop (beam_search_batch_ref,
+    tests/beam_ref.py) — pools, cmps and hops all equal — across metrics,
+    widths, pool sizes, exclusions and graph shapes, under both visited
+    sets. This is the gate that lets the pinned search oracles keep
+    certifying the fast kernel."""
+    import numpy as np
+
+    from mysteryann_spark.operators.search import _beam_search_batch
+    from tests.beam_ref import beam_search_batch_ref
+
+    for path in _visited_paths(monkeypatch):
+        rng = np.random.default_rng(7)
+        for trial in range(25):
+            n = int(rng.integers(30, 400))
+            deg = int(rng.integers(2, 12))
+            bmat = rng.standard_normal((n, 16))
+            lists = [
+                rng.choice(n, size=rng.integers(1, deg + 1), replace=False)
+                for _ in range(n)
+            ]
+            indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+            indices = np.concatenate(lists).astype(np.int64)
+            nq = int(rng.integers(1, 50))
+            qmat = rng.standard_normal((nq, 16))
+            L = int(rng.integers(2, 40))
+            w = int(rng.choice([1, 1, 2, 4, 8]))
+            metric = str(rng.choice(["l2", "ip", "cosine"]))
+            excl = np.where(
+                rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
+            ).astype(np.int64)
+            ep = int(rng.integers(0, n))
+            p1, c1, h1 = beam_search_batch_ref(
+                qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
+            p2, c2, h2 = _beam_search_batch(
+                qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
+            assert np.array_equal(c1, c2), (path, trial, metric, w)
+            assert np.array_equal(h1, h2), (path, trial, metric, w)
+            assert p1 == p2, (path, trial, metric, w)
+
+
+def test_vectorized_bipartite_kernel_bit_parity_with_scalar_reference(monkeypatch):
     """Same gate as the projection-graph kernel, for the 2-hop bipartite
     search: the vectorized kernel must match the scalar loop exactly —
     pools, cmps, hops — across metrics, seed multisets (duplicates
-    included) and graph shapes."""
+    included) and graph shapes, under both visited sets."""
     import numpy as np
 
-    from mysteryann_spark.operators.search import (
-        _beam_search_bipartite_batch,
-        _beam_search_bipartite_batch_ref,
-    )
+    from mysteryann_spark.operators.search import _beam_search_bipartite_batch
+    from tests.beam_ref import beam_search_bipartite_batch_ref
 
-    rng = np.random.default_rng(11)
-    for trial in range(20):
-        nb = int(rng.integers(20, 200))
-        nq_nodes = int(rng.integers(5, 80))
-        d = 12
-        bmat = rng.standard_normal((nb, d))
-        lists = [
-            nb + rng.choice(nq_nodes, size=rng.integers(0, 5), replace=False)
-            for _ in range(nb)
-        ] + [
-            rng.choice(nb, size=rng.integers(0, 6), replace=False)
-            for _ in range(nq_nodes)
-        ]
-        indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
-        indices = (
-            np.concatenate([np.asarray(l, dtype=np.int64) for l in lists])
-            if indptr[-1] else np.empty(0, np.int64)
-        )
-        nq = int(rng.integers(1, 30))
-        qmat = rng.standard_normal((nq, d))
-        L = int(rng.integers(2, 30))
-        seeds = [
-            [int(x) for x in rng.integers(0, nb, size=rng.integers(1, 10))]
-            for _ in range(nq)
-        ]
-        metric = str(rng.choice(["l2", "ip", "cosine"]))
-        p1, c1, h1 = _beam_search_bipartite_batch_ref(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        p2, c2, h2 = _beam_search_bipartite_batch(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric)
-        assert p1 == p2, (trial, metric)
+    for path in _visited_paths(monkeypatch):
+        rng = np.random.default_rng(11)
+        for trial in range(20):
+            nb = int(rng.integers(20, 200))
+            nq_nodes = int(rng.integers(5, 80))
+            d = 12
+            bmat = rng.standard_normal((nb, d))
+            lists = [
+                nb + rng.choice(nq_nodes, size=rng.integers(0, 5), replace=False)
+                for _ in range(nb)
+            ] + [
+                rng.choice(nb, size=rng.integers(0, 6), replace=False)
+                for _ in range(nq_nodes)
+            ]
+            indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+            indices = (
+                np.concatenate([np.asarray(l, dtype=np.int64) for l in lists])
+                if indptr[-1] else np.empty(0, np.int64)
+            )
+            nq = int(rng.integers(1, 30))
+            qmat = rng.standard_normal((nq, d))
+            L = int(rng.integers(2, 30))
+            seeds = [
+                [int(x) for x in rng.integers(0, nb, size=rng.integers(1, 10))]
+                for _ in range(nq)
+            ]
+            metric = str(rng.choice(["l2", "ip", "cosine"]))
+            p1, c1, h1 = beam_search_bipartite_batch_ref(
+                qmat, seeds, indptr, indices, bmat, L, metric)
+            p2, c2, h2 = _beam_search_bipartite_batch(
+                qmat, seeds, indptr, indices, bmat, L, metric)
+            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (path, trial, metric)
+            assert p1 == p2, (path, trial, metric)
 
 
-def test_beam_kernel_parity_on_tied_distances():
+def test_beam_kernel_parity_on_tied_distances(monkeypatch):
     """Duplicate base vectors force EXACT distance ties at the pool
     boundary — both kernels must resolve them by the full (dist, id)
     tuple order (NeighborPriorityQueue, neighbor.h:138-223), including
@@ -1143,122 +1258,119 @@ def test_beam_kernel_parity_on_tied_distances():
     diverged from the production kernels on tie-bearing data)."""
     import numpy as np
 
-    from mysteryann_spark.operators.search import (
-        _beam_search_batch,
-        _beam_search_batch_ref,
-    )
+    from mysteryann_spark.operators.search import _beam_search_batch
+    from tests.beam_ref import beam_search_batch_ref
 
-    rng = np.random.default_rng(23)
-    for trial in range(15):
-        n = int(rng.integers(60, 300))
-        # base rows drawn from a tiny vocabulary of distinct vectors ->
-        # masses of bit-exact duplicate rows, hence exact distance ties
-        vocab = rng.standard_normal((int(rng.integers(3, 8)), 8))
-        bmat = vocab[rng.integers(0, len(vocab), size=n)]
-        deg = int(rng.integers(2, 10))
-        lists = [
-            rng.choice(n, size=rng.integers(1, deg + 1), replace=False)
-            for _ in range(n)
-        ]
-        indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
-        indices = np.concatenate(lists).astype(np.int64)
-        nq = int(rng.integers(2, 25))
-        qmat = vocab[rng.integers(0, len(vocab), size=nq)]
-        L = int(rng.integers(2, 20))
-        w = int(rng.choice([1, 2, 4]))
-        metric = str(rng.choice(["l2", "ip", "cosine"]))
-        excl = np.where(
-            rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
-        ).astype(np.int64)
-        ep = int(rng.integers(0, n))
-        p1, c1, h1 = _beam_search_batch_ref(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        p2, c2, h2 = _beam_search_batch(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        assert np.array_equal(c1, c2), (trial, metric, w)
-        assert np.array_equal(h1, h2), (trial, metric, w)
-        assert p1 == p2, (trial, metric, w)
+    for path in _visited_paths(monkeypatch):
+        rng = np.random.default_rng(23)
+        for trial in range(15):
+            n = int(rng.integers(60, 300))
+            # base rows drawn from a tiny vocabulary of distinct vectors ->
+            # masses of bit-exact duplicate rows, hence exact distance ties
+            vocab = rng.standard_normal((int(rng.integers(3, 8)), 8))
+            bmat = vocab[rng.integers(0, len(vocab), size=n)]
+            deg = int(rng.integers(2, 10))
+            lists = [
+                rng.choice(n, size=rng.integers(1, deg + 1), replace=False)
+                for _ in range(n)
+            ]
+            indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+            indices = np.concatenate(lists).astype(np.int64)
+            nq = int(rng.integers(2, 25))
+            qmat = vocab[rng.integers(0, len(vocab), size=nq)]
+            L = int(rng.integers(2, 20))
+            w = int(rng.choice([1, 2, 4]))
+            metric = str(rng.choice(["l2", "ip", "cosine"]))
+            excl = np.where(
+                rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
+            ).astype(np.int64)
+            ep = int(rng.integers(0, n))
+            p1, c1, h1 = beam_search_batch_ref(
+                qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
+            p2, c2, h2 = _beam_search_batch(
+                qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
+            assert np.array_equal(c1, c2), (path, trial, metric, w)
+            assert np.array_equal(h1, h2), (path, trial, metric, w)
+            assert p1 == p2, (path, trial, metric, w)
 
 
-def test_bipartite_kernel_parity_on_tied_distances():
+def test_bipartite_kernel_parity_on_tied_distances(monkeypatch):
     """Tie-bearing case for the 2-hop bipartite kernel: duplicate base
     vectors AND duplicate seed draws, same (dist, id) boundary-order
     gate as the projection-graph case."""
     import numpy as np
 
-    from mysteryann_spark.operators.search import (
-        _beam_search_bipartite_batch,
-        _beam_search_bipartite_batch_ref,
-    )
+    from mysteryann_spark.operators.search import _beam_search_bipartite_batch
+    from tests.beam_ref import beam_search_bipartite_batch_ref
 
-    rng = np.random.default_rng(29)
-    for trial in range(12):
-        nb = int(rng.integers(30, 150))
-        nq_nodes = int(rng.integers(5, 50))
-        vocab = rng.standard_normal((int(rng.integers(3, 7)), 8))
-        bmat = vocab[rng.integers(0, len(vocab), size=nb)]
-        lists = [
-            nb + rng.choice(nq_nodes, size=rng.integers(0, 5), replace=False)
-            for _ in range(nb)
-        ] + [
-            rng.choice(nb, size=rng.integers(0, 6), replace=False)
-            for _ in range(nq_nodes)
-        ]
-        indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
-        indices = (
-            np.concatenate([np.asarray(l, dtype=np.int64) for l in lists])
-            if indptr[-1] else np.empty(0, np.int64)
-        )
-        nq = int(rng.integers(2, 20))
-        qmat = vocab[rng.integers(0, len(vocab), size=nq)]
-        L = int(rng.integers(2, 15))
-        seeds = [
-            [int(x) for x in rng.integers(0, nb, size=rng.integers(1, 10))]
-            for _ in range(nq)
-        ]
-        metric = str(rng.choice(["l2", "ip", "cosine"]))
-        p1, c1, h1 = _beam_search_bipartite_batch_ref(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        p2, c2, h2 = _beam_search_bipartite_batch(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric)
-        assert p1 == p2, (trial, metric)
+    for path in _visited_paths(monkeypatch):
+        rng = np.random.default_rng(29)
+        for trial in range(12):
+            nb = int(rng.integers(30, 150))
+            nq_nodes = int(rng.integers(5, 50))
+            vocab = rng.standard_normal((int(rng.integers(3, 7)), 8))
+            bmat = vocab[rng.integers(0, len(vocab), size=nb)]
+            lists = [
+                nb + rng.choice(nq_nodes, size=rng.integers(0, 5), replace=False)
+                for _ in range(nb)
+            ] + [
+                rng.choice(nb, size=rng.integers(0, 6), replace=False)
+                for _ in range(nq_nodes)
+            ]
+            indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+            indices = (
+                np.concatenate([np.asarray(l, dtype=np.int64) for l in lists])
+                if indptr[-1] else np.empty(0, np.int64)
+            )
+            nq = int(rng.integers(2, 20))
+            qmat = vocab[rng.integers(0, len(vocab), size=nq)]
+            L = int(rng.integers(2, 15))
+            seeds = [
+                [int(x) for x in rng.integers(0, nb, size=rng.integers(1, 10))]
+                for _ in range(nq)
+            ]
+            metric = str(rng.choice(["l2", "ip", "cosine"]))
+            p1, c1, h1 = beam_search_bipartite_batch_ref(
+                qmat, seeds, indptr, indices, bmat, L, metric)
+            p2, c2, h2 = _beam_search_bipartite_batch(
+                qmat, seeds, indptr, indices, bmat, L, metric)
+            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (path, trial, metric)
+            assert p1 == p2, (path, trial, metric)
 
 
-def test_bipartite_kernel_empty_seed_lists():
+def test_bipartite_kernel_empty_seed_lists(monkeypatch):
     """Seedless queries must return empty pools gracefully from BOTH
     kernels — the vectorized kernel used to crash in _merge_pools
     (zero-size reduction) when every seed list was empty (r7 ADVICE).
     Covers all-empty and mixed empty/non-empty seed sets."""
     import numpy as np
 
-    from mysteryann_spark.operators.search import (
-        _beam_search_bipartite_batch,
-        _beam_search_bipartite_batch_ref,
-    )
+    from mysteryann_spark.operators.search import _beam_search_bipartite_batch
+    from tests.beam_ref import beam_search_bipartite_batch_ref
 
-    rng = np.random.default_rng(31)
-    nb, nq_nodes = 40, 10
-    bmat = rng.standard_normal((nb, 8))
-    lists = [
-        nb + rng.choice(nq_nodes, size=2, replace=False) for _ in range(nb)
-    ] + [rng.choice(nb, size=3, replace=False) for _ in range(nq_nodes)]
-    indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
-    indices = np.concatenate(lists).astype(np.int64)
-    qmat = rng.standard_normal((3, 8))
-    for seeds in (
-        [[], [], []],                      # every seed list empty
-        [[], [0, 5, 5], []],               # mixed, with duplicate seeds
-    ):
-        p1, c1, h1 = _beam_search_bipartite_batch_ref(
-            qmat, seeds, indptr, indices, bmat, 8, "l2")
-        p2, c2, h2 = _beam_search_bipartite_batch(
-            qmat, seeds, indptr, indices, bmat, 8, "l2")
-        assert np.array_equal(c1, c2) and np.array_equal(h1, h2)
-        assert p1 == p2
-        for s, pool in zip(seeds, p2):
-            if not s:
-                assert pool == []
+    for path in _visited_paths(monkeypatch):
+        rng = np.random.default_rng(31)
+        nb, nq_nodes = 40, 10
+        bmat = rng.standard_normal((nb, 8))
+        lists = [
+            nb + rng.choice(nq_nodes, size=2, replace=False) for _ in range(nb)
+        ] + [rng.choice(nb, size=3, replace=False) for _ in range(nq_nodes)]
+        indptr = np.concatenate([[0], np.cumsum([len(l) for l in lists])]).astype(np.int64)
+        indices = np.concatenate(lists).astype(np.int64)
+        qmat = rng.standard_normal((3, 8))
+        for seeds in (
+            [[], [], []],                      # every seed list empty
+            [[], [0, 5, 5], []],               # mixed, with duplicate seeds
+        ):
+            p1, c1, h1 = beam_search_bipartite_batch_ref(
+                qmat, seeds, indptr, indices, bmat, 8, "l2")
+            p2, c2, h2 = _beam_search_bipartite_batch(
+                qmat, seeds, indptr, indices, bmat, 8, "l2")
+            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), path
+            assert p1 == p2, path
+            for s, pool in zip(seeds, p2):
+                if not s:
+                    assert pool == []
 
 
 def test_precomputed_knn_df_build_matches_inline_phase0(spark, emb):
